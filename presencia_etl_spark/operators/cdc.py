@@ -234,19 +234,6 @@ def digest_compare(
     return DigestCompare(sorted(dirty), clean_src, tdig)
 
 
-def digest_dirty_micro_buckets(
-    src_kh: DataFrame,
-    tgt_kh: DataFrame,
-    src_hash: str = "row_hash",
-    tgt_hash: str = "_tgt_hash",
-    micro: int | None = None,
-) -> tuple[list[int] | None, int]:
-    """Back-compat 2-tuple wrapper over :func:`digest_compare` (see its
-    docstring for the dirty/clean/decline semantics)."""
-    c = digest_compare(src_kh, tgt_kh, src_hash, tgt_hash, micro)
-    return c.dirty, c.clean_src
-
-
 def digest_delta_cols(
     op_col: str = OP_COL,
     new_hash: str = "row_hash",
@@ -477,10 +464,10 @@ def diff_states(
             _in_mb(dirty_mb)
         ).drop("_mb")
     elif digest_prune:
-        dirty, _clean = digest_dirty_micro_buckets(
+        dirty = digest_compare(
             ak.select(KEY_COL, "row_hash"),
             bk.select(KEY_COL, F.col("row_hash").alias("_tgt_hash")),
-        )
+        ).dirty
         if dirty is not None:
             ak = ak.withColumn("_mb", micro_bucket()).filter(
                 _in_mb(dirty)

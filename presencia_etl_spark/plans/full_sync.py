@@ -65,6 +65,38 @@ def prepare_table(
     return out
 
 
+def _semi_source(
+    cfg: TableConfig, configs: dict[str, TableConfig], tables: dict
+) -> DataFrame | None:
+    """The filtered source frame ``cfg``'s semi-join keeps rows against
+    (sync_ALL.py's subquery filter), or None when the table has no
+    semi-join or its partner table is not in this run."""
+    if cfg.semi_join is None:
+        return None
+    other, _ = cfg.semi_join
+    other_cfg = configs.get(other)
+    if other_cfg is None or other not in tables:
+        return None
+    return apply_filters(tables[other], other_cfg.filters)
+
+
+def _load_table(
+    spark: SparkSession,
+    df: DataFrame,
+    cfg: TableConfig,
+    target_path: str,
+    semi_source: DataFrame | None = None,
+) -> int:
+    """One table's full load: prepare → audit columns → overwrite, then
+    count the WRITTEN files — counting the output frame would re-run
+    the whole prepare/hash plan. The read takes the known schema, which
+    spares it a footer-inference job."""
+    prepared = prepare_table(df, cfg, semi_source=semi_source)
+    out = with_audit_columns(prepared, cfg.key_cols or [prepared.columns[0]])
+    overwrite_parquet(out, target_path)
+    return spark.read.schema(out.schema).parquet(target_path).count()
+
+
 def run_per_table(
     configs: dict[str, TableConfig],
     tables: dict,
@@ -127,17 +159,10 @@ def full_sync(
     Tables load concurrently (``run_per_table``)."""
 
     def load_one(name: str, cfg: TableConfig) -> int:
-        semi_src = None
-        if cfg.semi_join is not None:
-            other, _ = cfg.semi_join
-            other_cfg = configs.get(other)
-            if other_cfg is not None and other in tables:
-                semi_src = apply_filters(tables[other], other_cfg.filters)
-        prepared = prepare_table(tables[name], cfg, semi_source=semi_src)
-        key_cols = cfg.key_cols or [prepared.columns[0]]
-        out = with_audit_columns(prepared, key_cols)
-        overwrite_parquet(out, f"{target_root}/{name}")
-        return spark.read.parquet(f"{target_root}/{name}").count()
+        return _load_table(
+            spark, tables[name], cfg, f"{target_root}/{name}",
+            _semi_source(cfg, configs, tables),
+        )
 
     counts = run_per_table(configs, tables, load_one, max_parallel)
     if record_gen and counts:

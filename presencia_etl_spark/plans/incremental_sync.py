@@ -20,12 +20,17 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from presencia_etl_spark.plans.full_sync import prepare_table
+from presencia_etl_spark.plans.full_sync import (
+    _load_table,
+    _semi_source,
+    prepare_table,
+)
 from presencia_etl_spark.sinks.writers import (
     merge_upsert_parquet,
     merge_upsert_partitioned,
-    overwrite_parquet,
-    with_audit_columns,
+    # Unused here since full refreshes write through full_sync; kept as a
+    # module attribute that instrumentation wraps by name.
+    overwrite_parquet,  # noqa: F401
 )
 from presencia_etl_spark.sources.registry import TableConfig
 
@@ -42,10 +47,8 @@ def incremental_sync_table(
     key_cols = cfg.key_cols or [df.columns[0]]
 
     if cfg.full_refresh:
-        prepared = prepare_table(df, cfg, semi_source=semi_source)
-        out = with_audit_columns(prepared, key_cols)
-        overwrite_parquet(out, target_path)
-        return {"insert": out.count(), "update": 0, "skip": 0, "mode": "full_refresh"}
+        n = _load_table(spark, df, cfg, target_path, semi_source)
+        return {"insert": n, "update": 0, "skip": 0, "mode": "full_refresh"}
 
     # prepare_table computes row_hash over the RAW pre-cast strings (F6);
     # the merge must reuse that hash — recomputing over typed values would
@@ -107,17 +110,7 @@ def incremental_sync(
     transaction-refused). Tables sync sequentially on the calling thread
     — the writer-lock registry is thread-affine — trading the ≤4× table
     fan-out for the atomicity guarantee."""
-    from presencia_etl_spark.operators.filters import apply_filters
     from presencia_etl_spark.plans.full_sync import run_per_table
-
-    def _semi_src(cfg: TableConfig):
-        if cfg.semi_join is None:
-            return None
-        other, _ = cfg.semi_join
-        other_cfg = configs.get(other)
-        if other_cfg is not None and other in tables:
-            return apply_filters(tables[other], other_cfg.filters)
-        return None
 
     if atomic:
         bad = [
@@ -144,7 +137,8 @@ def incremental_sync(
         with MultiTableTxn(txn_root) as txn:
             for name, cfg in configs.items():
                 prepared = prepare_table(
-                    tables[name], cfg, semi_source=_semi_src(cfg), typed=True
+                    tables[name], cfg, semi_source=_semi_source(cfg, configs, tables),
+                    typed=True,
                 )
                 r = txn.merge(
                     spark, prepared, f"{target_root}/{cfg.name}",
@@ -154,22 +148,15 @@ def incremental_sync(
                 )
                 results[name] = {**r, "mode": "incremental_mor_txn"}
             txn.commit()
-        if record_gen and results:
-            from presencia_etl_spark.plans.generations import (
-                prune_generations,
-                record_generation,
+    else:
+
+        def sync_one(name: str, cfg: TableConfig) -> dict[str, int]:
+            return incremental_sync_table(
+                spark, tables[name], cfg, target_root,
+                semi_source=_semi_source(cfg, configs, tables),
             )
 
-            record_generation(spark, target_root)
-            prune_generations(target_root)
-        return results
-
-    def sync_one(name: str, cfg: TableConfig) -> dict[str, int]:
-        return incremental_sync_table(
-            spark, tables[name], cfg, target_root, semi_source=_semi_src(cfg)
-        )
-
-    results = run_per_table(configs, tables, sync_one, max_parallel)
+        results = run_per_table(configs, tables, sync_one, max_parallel)
     if record_gen and results:
         from presencia_etl_spark.plans.generations import (
             prune_generations,

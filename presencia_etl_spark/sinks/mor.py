@@ -17,13 +17,19 @@ Hudi/Iceberg merge-on-read answer with no table-format dependency:
 - ``_mor_meta.json``        {num_buckets, seq} bookkeeping.
 
 A sparse merge costs one narrow classify join plus a write of |changes|
-rows — no base file is touched. Readers reconcile: base rows whose key has
-no delta override, union the per-key LATEST delta row (window over the
-delta set only, which is small by construction; the base never enters a
-window). ``compact_mor`` folds the deltas into the base rewriting only the
-buckets deltas touch, through the same journaled crash-safe bucket swap as
-the COW merge, and auto-triggers after ``compact_every`` merges — bounding
-read amplification at ``compact_every`` small files per scan.
+rows — no base file is touched. The classify (digest prune, sidecar
+upkeep, op counts) is ``writers._classify``, the one every merge writer
+shares; this module supplies only the layout's target view (base ∪
+delta-latest) and what follows the counts — known-subset pruning,
+tombstones, the delta commit and auto-compaction.
+
+Readers reconcile: base rows whose key has no delta override, union the
+per-key LATEST delta row (window over the delta set only, which is small
+by construction; the base never enters a window). ``compact_mor`` folds
+the deltas into the base rewriting only the buckets deltas touch,
+through the same journaled crash-safe bucket swap as the COW merge, and
+auto-triggers after ``compact_every`` merges — bounding read
+amplification at ``compact_every`` small files per scan.
 
 Reference semantics preserved (sync_INCREMENTAL.py:169-204): INSERT new
 keys, UPDATE changed hashes (created_at/id preserved, updated_at
@@ -53,6 +59,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from presencia_etl_spark.functions.partitioning import parallelize_scan
 from presencia_etl_spark.functions.pushdown import in_list
 from presencia_etl_spark.operators import cdc
 from presencia_etl_spark.sinks import digest_store
@@ -60,22 +67,19 @@ from presencia_etl_spark.sinks.locking import single_writer
 from presencia_etl_spark.sinks.writers import (
     AUDIT_COLS,
     BUCKET_COL,
+    _classify,
     _fetch_dirty_rows,
+    _hashed,
     _maybe_broadcast,
-    _parallelize_scan,
+    _next_id_offset,
     _recover_interrupted_swap,
     _reseed_empty_layout,
     _warn_audit_collisions,
     merge_upsert_partitioned,
     swap_bucket_dirs,
+    with_audit_columns,
 )
 from presencia_etl_spark.sinks.writers import is_spark_hidden as writers_is_spark_hidden
-from presencia_etl_spark.sinks.writers import (
-    _should_persist_narrow as writers_should_persist_narrow,
-)
-from presencia_etl_spark.sinks.writers import (
-    _is_tiny_source as writers_is_tiny_source,
-)
 from presencia_etl_spark.sinks.writers import (
     _state_absent as writers_state_absent,
 )
@@ -434,14 +438,8 @@ def merge_upsert_mor(
     _gc_orphan_compact_staging(target_path)
     _recover_empty_base(spark, target_path)
     _warn_audit_collisions(src)
-    src = _parallelize_scan(src)
-    hashed = (
-        src
-        if "row_hash" in src.columns
-        else cdc.with_row_hash(
-            src, hash_cols or [c for c in src.columns if c not in AUDIT_COLS]
-        )
-    )
+    src = parallelize_scan(src)
+    hashed = _hashed(src, hash_cols)
     keyed = cdc.with_cdc_key(hashed, key_cols).withColumn(
         BUCKET_COL,
         F.pmod(F.xxhash64(F.col(cdc.KEY_COL)), F.lit(meta["num_buckets"])).cast(
@@ -532,165 +530,77 @@ def merge_upsert_mor(
         if len(ksample) <= KEY_PUSHDOWN_LIMIT:
             subset_keys = [r[cdc.KEY_COL] for r in ksample]
             subset_buckets = sorted({r[BUCKET_COL] for r in ksample})
-    # Current (key → hash) view: base overridden by the latest delta. A
-    # key whose latest version is a TOMBSTONE is absent from the view —
-    # its base row is still anti-joined away, and it contributes no hash —
-    # so a re-submitted deleted key classifies as INSERT (fresh identity),
-    # never as an UPDATE of the erased row.
-    base_src = base
-    if subset_keys is not None:
-        base_src = base.filter(in_list(BUCKET_COL, subset_buckets)).filter(
-            in_list(cdc.KEY_COL, subset_keys)
-        )
-    base_kh = base_src.select(cdc.KEY_COL, F.col("row_hash").alias("_tgt_hash"))
-    if deltas is not None:
-        dlatest = _delta_latest(deltas)
-        dl_src = dlatest
-        if subset_keys is not None:
-            # same universe restriction on the delta side — the pruned
-            # view stays exactly filter-equivalent for the source's keys
-            dl_src = dlatest.filter(in_list(cdc.KEY_COL, subset_keys))
-        dl = dl_src.filter(~F.col(DELETED_COL)).select(
-            cdc.KEY_COL, F.col("row_hash").alias("_tgt_hash")
-        )
-        base_kh = base_kh.join(
-            F.broadcast(dl_src.select(cdc.KEY_COL)), cdc.KEY_COL, "left_anti"
-        ).unionByName(dl)
+    dlatest = _delta_latest(deltas) if deltas is not None else None
 
-    # Micro-bucket digest prune (operators/cdc.py): summarize incoming vs
-    # the current (base ∪ delta-latest) key view per pmod(xxhash64(key),
-    # 16K) and classify only the micro-buckets whose digests differ. A
-    # digest-identical state is a proven no-change merge — including "no
-    # missing keys" for delete_missing, since a vanished key perturbs its
-    # micro-bucket's digest — and returns before any join. Sparse merges
-    # join O(changes × rows/16K) rows; the base side of the classify is
-    # additionally DIRECTORY-pruned (micro-bucket mod num_buckets = its
-    # _kb= dir, nested moduli).
-    s_narrow = keyed.select(*key_cols, cdc.KEY_COL, BUCKET_COL, "row_hash")
-    dirty_mb, clean_skip = (None, 0)
-    tgt_dig = None
-    side_loaded = False
-    if digest_prune:
-        # Persisted across digest + classify so the source hash/normalize
-        # runs once whatever the prune decides — small states only (see
-        # writers.DIGEST_PERSIST_MAX_BYTES; the walk covers base+deltas).
-        if writers_should_persist_narrow(target_path):
-            s_narrow = s_narrow.persist()
-        # The target side of the compare comes from the persisted sidecar
-        # when its fingerprint matches the table (base + deltas + meta)
-        # listing — then the LIVE (base ∪ delta-latest) view is never
-        # scanned at all; otherwise one narrow scan computes it and the
-        # merge saves a fresh sidecar after the delta commits.
-        side_dig = (
-            tgt_digest
-            if tgt_digest is not None
-            else digest_store.load(target_path)
+    def tgt_kh(dirty_kb: list[int] | None) -> DataFrame:
+        # Current (key → hash) view: base overridden by the latest delta.
+        # A key whose latest version is a TOMBSTONE is absent from the
+        # view — its base row is still anti-joined away, and it
+        # contributes no hash — so a re-submitted deleted key classifies
+        # as INSERT (fresh identity), never as an UPDATE of the erased
+        # row. The known-subset universe restriction applies to both
+        # sides, so the pruned view stays exactly filter-equivalent for
+        # the source's keys.
+        b = base if dirty_kb is None else base.filter(in_list(BUCKET_COL, dirty_kb))
+        dl = dlatest
+        if subset_keys is not None:
+            b = b.filter(in_list(BUCKET_COL, subset_buckets)).filter(
+                in_list(cdc.KEY_COL, subset_keys)
+            )
+            if dl is not None:
+                dl = dl.filter(in_list(cdc.KEY_COL, subset_keys))
+        kh = b.select(cdc.KEY_COL, F.col("row_hash").alias("_tgt_hash"))
+        if dl is None:
+            return kh
+        return kh.join(
+            F.broadcast(dl.select(cdc.KEY_COL)), cdc.KEY_COL, "left_anti"
+        ).unionByName(
+            dl.filter(~F.col(DELETED_COL)).select(
+                cdc.KEY_COL, F.col("row_hash").alias("_tgt_hash")
+            )
         )
-        side_loaded = side_dig is not None
-        dcmp = cdc.digest_compare(
-            s_narrow.select(cdc.KEY_COL, "row_hash"),
-            None if side_loaded else base_kh,
-            tgt_digest=side_dig,
-            collect_src=side_loaded and writers_is_tiny_source(src),
-            src_digest=src_digest if side_loaded else None,
-        )
-        dirty_mb, clean_skip = dcmp.dirty, dcmp.clean_src
-        # Kill switch removes the maintenance cost too, not just the save.
-        tgt_dig = dcmp.tgt_digest if digest_store.enabled() else None
-    elif digest_store.enabled():
-        # Maintenance decoupled from pruning (see writers.merge_upsert_
-        # parquet): a streaming micro-batch merge (digest_prune=False —
-        # its digests are dirty nearly everywhere, so the compare buys
-        # nothing) still keeps a VALID sidecar valid by folding its
-        # classified changes in; without this, one trickle batch between
-        # snapshot syncs knocks the cron steady state back onto the full
-        # scan path. Load-only — never seeds from a scan.
-        tgt_dig = digest_store.load(target_path)
-        side_loaded = tgt_dig is not None
-    if dirty_mb is not None and not dirty_mb:
-        s_narrow.unpersist()
-        if not side_loaded:
-            if txn is not None:
-                txn._defer_digest(target_path, tgt_dig)
-            else:
-                digest_store.save(target_path, tgt_dig)
-        return {
-            "insert": 0, "update": 0, "skip": clean_skip, "delete": 0,
-            "delta_files": 0, "compacted": False,
-        }
-    s_cls = s_narrow
-    if dirty_mb is not None:
-        s_cls = s_narrow.withColumn(
-            "_mb", cdc.micro_bucket()
-        ).filter(in_list("_mb", dirty_mb)).drop("_mb")
-        base_cls = base
-        if cdc.DIGEST_MICRO_BUCKETS % meta["num_buckets"] == 0:
-            dirty_kb = sorted({mb % meta["num_buckets"] for mb in dirty_mb})
-            base_cls = base.filter(in_list(BUCKET_COL, dirty_kb))
-        base_kh = base_cls.select(
-            cdc.KEY_COL, F.col("row_hash").alias("_tgt_hash")
-        )
-        if deltas is not None:
-            base_kh = base_kh.join(
-                F.broadcast(dlatest.select(cdc.KEY_COL)),
-                cdc.KEY_COL,
-                "left_anti",
-            ).unionByName(dl)
-        base_kh = base_kh.withColumn(
-            "_mb", cdc.micro_bucket()
-        ).filter(in_list("_mb", dirty_mb)).drop("_mb")
-    else:
-        clean_skip = 0
+
+    # A digest-identical state is a proven no-change merge — including
+    # "no missing keys" for delete_missing, since a vanished key perturbs
+    # its micro-bucket's digest. The narrow frame stays persisted past
+    # the counts: delete_missing reads its source key set off it.
+    c = _classify(
+        target_path, keyed, key_cols, tgt_kh,
+        num_buckets=meta["num_buckets"],
+        digest_prune=digest_prune,
+        src_digest=src_digest,
+        tgt_digest=tgt_digest,
+        keep_narrow=True,
+        save=(lambda d: txn._defer_digest(target_path, d)) if txn is not None else None,
+    )
+    n_insert, n_update, n_skip = c.n_insert, c.n_update, c.n_skip
+    no_change = {
+        "insert": 0, "update": 0, "skip": n_skip, "delete": 0,
+        "delta_files": 0, "compacted": False,
+    }
+    if c.ops is None:
+        c.release()
+        c.seed_digest()
+        return no_change
     # delete_missing's anti-join must see the SAME pruned universe on
     # both sides (a missing key always dirties its micro-bucket, so no
-    # vanished key escapes the filter); reading the keys off s_cls also
-    # reuses the persisted narrow frame instead of re-deriving them.
-    src_key_set = s_cls.select(cdc.KEY_COL)
-
-    joined = s_cls.join(base_kh, cdc.KEY_COL, "left_outer")
-    op = (
-        F.when(F.col("_tgt_hash").isNull(), F.lit(cdc.INSERT))
-        .when(F.col("row_hash") != F.col("_tgt_hash"), F.lit(cdc.UPDATE))
-        .otherwise(F.lit(cdc.SKIP))
-    )
-    dg_cols = cdc.digest_delta_cols() if tgt_dig is not None else []
-    ops = (
-        joined.withColumn(cdc.OP_COL, op)
-        .select(*key_cols, cdc.KEY_COL, BUCKET_COL, cdc.OP_COL, "row_hash", *dg_cols)
-        .cache()
-    )
+    # vanished key escapes the filter).
+    src_key_set = c.s_cls.select(cdc.KEY_COL)
     src_dirty = None
     upd_keys = None
     missing = None
-    new_dig = None
     del_victim_src = None
     keyed_del_cache = None
     try:
-        # ONE bounded collect (≤ 3·num_buckets rows) yields op counts AND
-        # the per-op dirty buckets while materializing the classify cache.
-        op_buckets = (
-            ops.groupBy(cdc.OP_COL, BUCKET_COL)
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .collect()
-        )
-        counts: dict[str, int] = {}
-        for r in op_buckets:
-            counts[r[cdc.OP_COL]] = counts.get(r[cdc.OP_COL], 0) + r["cnt"]
-        n_insert = counts.get(cdc.INSERT, 0)
-        n_update = counts.get(cdc.UPDATE, 0)
-        # Digest-clean micro-buckets' rows never reached the join but are
-        # proven SKIPs — keep the reported counts (and the empty-source
-        # refusal below) src-complete.
-        n_skip = counts.get(cdc.SKIP, 0) + clean_skip
         n_delete = 0
         if delete_missing:
-            # Live keys the snapshot no longer contains. base_kh is the
+            # Live keys the snapshot no longer contains. t_cls is the
             # CURRENT key view (tombstone-latest keys already excluded),
             # so replays converge: once tombstoned, a key isn't live and
             # can't go "missing" again.
             # _tgt_hash rides along: the sidecar delta must xor OUT each
             # deleted key's old (key, hash) fold.
-            missing = base_kh.select(cdc.KEY_COL, "_tgt_hash").join(
+            missing = c.t_cls.select(cdc.KEY_COL, "_tgt_hash").join(
                 src_key_set.distinct(), cdc.KEY_COL, "left_anti"
             ).cache()
             n_delete = missing.count()
@@ -757,53 +667,27 @@ def merge_upsert_mor(
         if n_insert == 0 and n_update == 0 and n_delete == 0:
             # Idempotent replay / no-op: NOTHING is written — not even an
             # empty delta dir (which would still cost a file open per scan).
-            if tgt_dig is not None and not side_loaded:
-                if txn is not None:
-                    txn._defer_digest(target_path, tgt_dig)
-                else:
-                    digest_store.save(target_path, tgt_dig)
-            return {
-                "insert": 0,
-                "update": 0,
-                "skip": n_skip,
-                "delete": 0,
-                "delta_files": 0,
-                "compacted": False,
-            }
+            c.seed_digest()
+            return no_change
 
         # The merge WILL commit a delta: fold the classified changes
-        # (and snapshot-diff deletes) into the digest now, off the hot
+        # (and the tombstoned keys) into the digest now, off the hot
         # caches; the save happens after the delta (and any auto-
         # compaction) lands, binding digest to the final listing.
-        if tgt_dig is not None:
-            delta_rows = cdc.collect_digest_delta(
-                ops.filter(F.col(cdc.OP_COL) != cdc.SKIP)
-            )
-            if delta_rows is not None and n_delete > 0:
-                d_del = cdc.collect_digest_delta(
-                    missing.select(
-                        cdc.KEY_COL, *cdc.digest_delete_delta_cols()
-                    )
-                )
-                delta_rows = (
-                    delta_rows + d_del if d_del is not None else None
-                )
-            if delta_rows is not None:
-                new_dig = digest_store.apply_delta(tgt_dig, delta_rows)
+        new_dig = c.fold(missing if n_delete > 0 else None)
 
         n_dirty = n_insert + n_update
-        dirty_ops = ops.filter(F.col(cdc.OP_COL) != cdc.SKIP)
         src_dirty = _fetch_dirty_rows(
             hashed,
-            dirty_ops,
+            c.changes(),
             key_cols,
             n_dirty,
             carry=[cdc.OP_COL, "row_hash", cdc.KEY_COL, BUCKET_COL],
         ).cache()
         data_cols = [
-            c
-            for c in base.columns
-            if c not in AUDIT_COLS and c not in (BUCKET_COL, cdc.KEY_COL)
+            col
+            for col in base.columns
+            if col not in AUDIT_COLS and col not in (BUCKET_COL, cdc.KEY_COL)
         ]
         audit = ["row_hash", "id", "created_at", "updated_at", cdc.KEY_COL, BUCKET_COL]
 
@@ -816,14 +700,7 @@ def merge_upsert_mor(
         )
         parts: list[DataFrame] = []
         if n_update > 0:
-            upd_buckets = sorted(
-                {
-                    r[BUCKET_COL]
-                    for r in op_buckets
-                    if r[cdc.OP_COL] == cdc.UPDATE
-                }
-            )
-            base_cur = base.filter(in_list(BUCKET_COL, upd_buckets))
+            base_cur = base.filter(in_list(BUCKET_COL, c.buckets(cdc.UPDATE)))
             delta_cur = deltas
             if n_update <= KEY_PUSHDOWN_LIMIT:
                 # Second pruning level under the _kb= dir pruning: the
@@ -865,26 +742,16 @@ def merge_upsert_mor(
             )
             parts.append(updated.select(*data_cols, *audit))
         if n_insert > 0:
-            from presencia_etl_spark.sinks.writers import with_audit_columns
-
-            from presencia_etl_spark.sinks.writers import _max_id_stat
-
-            # Footer-stats max over base AND live deltas (one walk each);
-            # falls back to the scans only when stats are absent.
-            max_id = _max_id_stat(base_path)
-            d_max = _max_id_stat(os.path.join(target_path, DELTA_DIR))
-            if max_id is None:
-                max_id = base.agg(F.max("id")).collect()[0][0] or 0
+            # Ids above the max over base AND live deltas.
+            id_paths = [base_path]
             if deltas is not None:
-                if d_max is None:
-                    d_max = deltas.agg(F.max("id")).collect()[0][0] or 0
-                max_id = max(max_id, d_max)
+                id_paths.append(os.path.join(target_path, DELTA_DIR))
             inserted = with_audit_columns(
                 src_dirty.filter(F.col(cdc.OP_COL) == cdc.INSERT).select(
                     *data_cols, "row_hash", cdc.KEY_COL, BUCKET_COL
                 ),
                 key_cols,
-                id_offset=int(max_id),
+                id_offset=_next_id_offset(spark, id_paths),
             )
             parts.append(inserted.select(*data_cols, *audit))
 
@@ -920,13 +787,12 @@ def merge_upsert_mor(
         )
     finally:
         # Caches release on failure too — a failed merge must not leak
-        # persisted frames for the session lifetime.
-        ops.unpersist()
-        # Released HERE, not at the op-counts collect: delete_missing's
-        # anti-join reads its source key set off this persisted frame
-        # after the collect — unpersisting earlier silently re-ran the
-        # whole source scan + key normalize for snapshot-diff syncs.
-        s_narrow.unpersist()
+        # persisted frames for the session lifetime. The narrow frame is
+        # released HERE, not at the op-counts collect: delete_missing's
+        # anti-join reads its source key set off it after the collect —
+        # unpersisting earlier silently re-ran the whole source scan +
+        # key normalize for snapshot-diff syncs.
+        c.release()
         if src_dirty is not None:
             src_dirty.unpersist()
         if upd_keys is not None:
@@ -952,10 +818,7 @@ def merge_upsert_mor(
     # content) is on disk: the fingerprint binds the maintained digest
     # to exactly this listing. A transactional merge defers the save to
     # commit() — the final listing doesn't exist until the renames land.
-    if txn is not None:
-        txn._defer_digest(target_path, new_dig)
-    else:
-        digest_store.save(target_path, new_dig)
+    c.save(new_dig)
     return {
         "insert": n_insert,
         "update": n_update,

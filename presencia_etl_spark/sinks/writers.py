@@ -28,6 +28,9 @@ import shutil
 import tempfile
 import warnings
 
+from collections.abc import Callable
+from dataclasses import dataclass, field
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -669,13 +672,6 @@ def _maybe_broadcast(df: DataFrame, n_rows: int, limit: int | None = None):
     return F.broadcast(df) if n_rows <= limit else df
 
 
-def _parallelize_scan(df: DataFrame) -> DataFrame:
-    """Spread the expensive per-row projections (key normalize, SHA-256
-    row hash) across the session's full parallelism — measured 8→3 s on
-    the bench full load. See functions/partitioning.py."""
-    return parallelize_scan(df)
-
-
 
 def _max_id_stat(path: str):
     """max(id) from parquet footer column statistics — a driver-side
@@ -742,6 +738,289 @@ def _fetch_dirty_rows(
     return d.join(_maybe_broadcast(b, n_dirty), cond).drop(
         *[f"_b_{c}" for c in key_cols]
     )
+
+
+def _hashed(src: DataFrame, hash_cols: list[str] | None) -> DataFrame:
+    """Trust a pre-computed ``row_hash`` (pipelines hash RAW pre-cast
+    strings — recomputing over typed values, or over the hash column
+    itself, would misclassify every row as UPDATE); otherwise hash
+    ``hash_cols`` or every non-audit column (audit values must never
+    feed row identity)."""
+    if "row_hash" in src.columns:
+        return src
+    return cdc.with_row_hash(
+        src, hash_cols or [c for c in src.columns if c not in AUDIT_COLS]
+    )
+
+
+def _next_id_offset(spark: SparkSession, paths: list[str]) -> int:
+    """Largest surrogate id stored under ``paths`` (0 when none) — the
+    ``id_offset`` for a merge's inserts. Footer stats first
+    (``_max_id_stat``, a metadata walk); a path whose stats are missing
+    falls back to a Spark ``max(id)`` over it. Every path must hold
+    parquet files."""
+    best = 0
+    for p in paths:
+        m = _max_id_stat(p)
+        if m is None:
+            m = spark.read.parquet(p).agg(F.max("id")).collect()[0][0]
+        best = max(best, m or 0)
+    return int(best)
+
+
+@dataclass
+class _Classified:
+    """The shared merge front half's result (see ``_classify``).
+
+    ``ops`` is the cached classify frame — (key cols, ``_cdc_key``[,
+    ``_kb``], ``row_hash``, ``_cdc_op``[, digest-delta cols]) over the
+    digest-dirty rows — or None when the digest proved the merge a
+    no-change. ``s_cls``/``t_cls`` are the two (pruned) sides it joined.
+    Counts include the proven-clean skips; ``op_buckets`` holds the
+    per-(op, ``_kb``) count rows of bucketed layouts."""
+
+    narrow: DataFrame
+    tgt_dig: dict | None
+    side_loaded: bool
+    save: Callable[[dict | None], None]
+    ops: DataFrame | None = None
+    s_cls: DataFrame | None = None
+    t_cls: DataFrame | None = None
+    n_insert: int = 0
+    n_update: int = 0
+    n_skip: int = 0
+    op_buckets: list = field(default_factory=list)
+
+    def changes(self) -> DataFrame:
+        return self.ops.filter(F.col(cdc.OP_COL) != cdc.SKIP)
+
+    def buckets(self, *ops: str) -> list[int]:
+        return sorted(
+            {r[BUCKET_COL] for r in self.op_buckets if r[cdc.OP_COL] in ops}
+        )
+
+    def seed_digest(self) -> None:
+        """No-change exit: persist a digest the compare had to SCAN for
+        (a loaded sidecar is already on disk and still valid)."""
+        if not self.side_loaded:
+            self.save(self.tgt_dig)
+
+    def fold(self, deletes: DataFrame | None = None) -> dict | None:
+        """The post-merge digest: the target digest ⊕ the classified
+        changes (⊕ the retraction of ``deletes``, a (``_cdc_key``,
+        ``_tgt_hash``) frame of removed live keys). One bounded collect
+        per folded frame; None when there is nothing to maintain or the
+        fold stood down (duplicate keys — see cdc.collect_digest_delta).
+        Save the result strictly after the table publish."""
+        if self.tgt_dig is None:
+            return None
+        rows = cdc.collect_digest_delta(self.changes())
+        if rows is not None and deletes is not None:
+            gone = cdc.collect_digest_delta(
+                deletes.select(cdc.KEY_COL, *cdc.digest_delete_delta_cols())
+            )
+            rows = rows + gone if gone is not None else None
+        if rows is None:
+            return None
+        return digest_store.apply_delta(self.tgt_dig, rows)
+
+    def release(self) -> None:
+        if self.ops is not None:
+            self.ops.unpersist()
+        self.narrow.unpersist()
+
+
+def _in_micro_buckets(df: DataFrame, dirty_mb: list[int]) -> DataFrame:
+    return df.withColumn("_mb", cdc.micro_bucket()).filter(
+        in_list("_mb", dirty_mb)
+    ).drop("_mb")
+
+
+def _classify(
+    target_path: str,
+    keyed: DataFrame,
+    key_cols: list[str],
+    tgt_kh: Callable[[list[int] | None], DataFrame],
+    num_buckets: int | None = None,
+    digest_prune: bool = True,
+    digest_ok: bool = True,
+    src_digest: dict | None = None,
+    tgt_digest: dict | None = None,
+    keep_narrow: bool = False,
+    save: Callable[[dict | None], None] | None = None,
+) -> _Classified:
+    """THE classify of every merge writer (flat, bucketed, MOR): each
+    source row → INSERT / UPDATE / SKIP against the target's key→hash
+    view, digest-pruned. New merge shapes call this; never re-copy it.
+
+    ``keyed``: the hashed source with ``_cdc_key`` (and ``_kb`` when
+    ``num_buckets`` is given). ``tgt_kh(dirty_kb)`` builds the layout's
+    target (``_cdc_key``, ``_tgt_hash``) view — restricted to the
+    ``_kb`` dirs in ``dirty_kb`` when that is not None.
+
+    Micro-bucket digest prune (operators/cdc.py): both sides are
+    summarized per pmod(xxhash64(key), 16K) and only the rows of
+    micro-buckets whose digests differ reach the classify join. A
+    proven no-change merge returns before any join (``ops`` None); a
+    sparse one joins O(changes × rows/16K) rows, and a bucketed target
+    side is additionally DIRECTORY-pruned (a dirty micro-bucket lives
+    in exactly one ``_kb=`` dir: same hash, nested moduli). The target
+    digest comes from the fingerprint-validated sidecar
+    (sinks/digest_store.py) — ZERO target-side I/O — or from the
+    caller's ``tgt_digest`` (validated under the same writer lock, so
+    the compare runs on the exact dicts the caller pruned from);
+    otherwise one narrow scan computes it and the writer saves it
+    after publishing so the next sync skips the scan.
+
+    ``digest_ok=False`` (schema drift, ``_cdc_key`` backfill: every
+    bucket rewrites anyway and stored hashes cover a different column
+    set) skips all digest work. ``digest_prune=False`` (known-subset
+    merges — streaming micro-batches, explicit change batches — whose
+    digests are dirty nearly everywhere) skips the compare but still
+    MAINTAINS a valid sidecar: one trickle batch must not knock the
+    next snapshot sync back onto the scan path. Load-only: a stale or
+    absent sidecar is never seeded without a compare.
+
+    The narrow frame is persisted across the digest and the classify
+    (small states only, see DIGEST_PERSIST_MAX_BYTES) so the source
+    hash/normalize runs once whatever the prune decides; it is released
+    after the counts collect unless ``keep_narrow`` (the caller then
+    reads ``s_cls`` again and calls ``release``). ``save`` persists a
+    digest (default: ``digest_store.save`` on ``target_path``)."""
+    bucket = [BUCKET_COL] if num_buckets else []
+    cols = [*key_cols, cdc.KEY_COL, *bucket, "row_hash"]
+    narrow = keyed.select(*cols)
+    dirty_mb, clean_skip = None, 0
+    tgt_dig, side_loaded = None, False
+    if digest_ok and digest_prune:
+        if _should_persist_narrow(target_path):
+            narrow = narrow.persist()
+        side_dig = (
+            tgt_digest if tgt_digest is not None else digest_store.load(target_path)
+        )
+        side_loaded = side_dig is not None
+        dcmp = cdc.digest_compare(
+            narrow.select(cdc.KEY_COL, "row_hash"),
+            None if side_loaded else tgt_kh(None),
+            tgt_digest=side_dig,
+            collect_src=side_loaded and _is_tiny_source(keyed),
+            src_digest=src_digest if side_loaded else None,
+        )
+        dirty_mb, clean_skip = dcmp.dirty, dcmp.clean_src
+        # The kill switch removes the maintenance cost too (delta
+        # columns in the classify cache + the fold job), not just the
+        # final save.
+        tgt_dig = dcmp.tgt_digest if digest_store.enabled() else None
+    elif digest_ok and digest_store.enabled():
+        tgt_dig = digest_store.load(target_path)
+        side_loaded = tgt_dig is not None
+    c = _Classified(
+        narrow, tgt_dig, side_loaded,
+        save or (lambda d: digest_store.save(target_path, d)),
+    )
+    if dirty_mb is not None and not dirty_mb:
+        narrow.unpersist()
+        c.n_skip = clean_skip
+        return c
+    if dirty_mb is None:
+        c.s_cls, c.t_cls = narrow, tgt_kh(None)
+    else:
+        dirty_kb = None
+        if num_buckets and cdc.DIGEST_MICRO_BUCKETS % num_buckets == 0:
+            dirty_kb = sorted({mb % num_buckets for mb in dirty_mb})
+        c.s_cls = _in_micro_buckets(narrow, dirty_mb)
+        c.t_cls = _in_micro_buckets(tgt_kh(dirty_kb), dirty_mb)
+    op = (
+        F.when(F.col("_tgt_hash").isNull(), F.lit(cdc.INSERT))
+        .when(F.col("row_hash") != F.col("_tgt_hash"), F.lit(cdc.UPDATE))
+        .otherwise(F.lit(cdc.SKIP))
+    )
+    # Sidecar maintenance needs each row's digest-delta fold, which reads
+    # the OLD target hash — project it into the classify cache while
+    # ``_tgt_hash`` is still bound (three 8-byte columns; clean micro-
+    # buckets never reached the join and contribute zero delta). Only
+    # the narrow columns are cached: writers rebuild wide rows from the
+    # small dirty sets (``_fetch_dirty_rows``), never a table-sized cache.
+    dg_cols = cdc.digest_delta_cols() if tgt_dig is not None else []
+    c.ops = (
+        c.s_cls.join(c.t_cls, cdc.KEY_COL, "left_outer")
+        .withColumn(cdc.OP_COL, op)
+        .select(*cols, cdc.OP_COL, *dg_cols)
+        .cache()
+    )
+    # ONE bounded collect (≤ 3·num_buckets rows) yields the op counts
+    # (and a bucketed layout's per-op dirty buckets) while materializing
+    # the classify cache every later step reuses.
+    try:
+        c.op_buckets = (
+            c.ops.groupBy(cdc.OP_COL, *bucket)
+            .agg(F.count(F.lit(1)).alias("cnt"))
+            .collect()
+        )
+    except BaseException:
+        c.release()
+        raise
+    if not keep_narrow:
+        narrow.unpersist()
+    counts: dict[str, int] = {}
+    for r in c.op_buckets:
+        counts[r[cdc.OP_COL]] = counts.get(r[cdc.OP_COL], 0) + r["cnt"]
+    c.n_insert = counts.get(cdc.INSERT, 0)
+    c.n_update = counts.get(cdc.UPDATE, 0)
+    # Rows in digest-clean micro-buckets never reached the join but are
+    # proven SKIPs — keep the reported counts src-complete.
+    c.n_skip = counts.get(cdc.SKIP, 0) + clean_skip
+    return c
+
+
+def _rewrite_rows(
+    spark: SparkSession,
+    target_path: str,
+    tgt_k: DataFrame,
+    src_h: DataFrame,
+    c: _Classified,
+    key_cols: list[str],
+    out_cols: list[str],
+) -> tuple[DataFrame, DataFrame]:
+    """The COW rewrite input: ``tgt_k`` (the target rows being
+    rewritten, keyed) minus the updated keys ∪ the updated rows (id and
+    created_at kept from the target, updated_at refreshed) ∪ the
+    inserted rows (fresh ids above the table's max), projected to
+    ``out_cols``. The wide source rows come from ONE re-scan for the
+    dirty keys (``_fetch_dirty_rows``); the target side of the updates
+    is pre-filtered to the updated keys so the final join has a tiny
+    build side. Returns (rows, src_dirty) — the caller unpersists
+    ``src_dirty`` once the write is done."""
+    bucket = [BUCKET_COL] if BUCKET_COL in out_cols else []
+    dirty_ops = c.changes()
+    upd_keys = dirty_ops.filter(F.col(cdc.OP_COL) == cdc.UPDATE).select(cdc.KEY_COL)
+    src_dirty = _fetch_dirty_rows(
+        src_h, dirty_ops, key_cols, c.n_insert + c.n_update,
+        carry=[cdc.OP_COL, "row_hash", cdc.KEY_COL, *bucket],
+    ).cache()
+    upd_b = _maybe_broadcast(upd_keys, c.n_update)
+    untouched = tgt_k.join(upd_b, cdc.KEY_COL, "left_anti")
+    tgt_upd = tgt_k.select(cdc.KEY_COL, "id", "created_at").join(
+        upd_b, cdc.KEY_COL, "left_semi"
+    )
+    updated = (
+        src_dirty.filter(F.col(cdc.OP_COL) == cdc.UPDATE)
+        .join(_maybe_broadcast(tgt_upd, c.n_update), cdc.KEY_COL)
+        .withColumn("updated_at", F.current_timestamp())
+    )
+    rows = untouched.select(*out_cols).unionByName(updated.select(*out_cols))
+    if c.n_insert > 0:
+        # max(id) is a metadata walk (a scan only without footer stats)
+        # — paid only when inserting.
+        inserted = with_audit_columns(
+            src_dirty.filter(F.col(cdc.OP_COL) == cdc.INSERT).select(
+                *[x for x in out_cols if x not in ("id", "created_at", "updated_at")]
+            ),
+            key_cols,
+            id_offset=_next_id_offset(spark, [target_path]),
+        )
+        rows = rows.unionByName(inserted.select(*out_cols))
+    return rows, src_dirty
 
 
 def _widen_for_drift(
@@ -1013,21 +1292,12 @@ def merge_upsert_partitioned(
     This is the plan shape of Delta's MERGE with partition pruning, with no
     non-core dependency.
     """
-    # Trust a pre-computed row_hash (pipelines hash RAW pre-cast strings —
-    # recomputing over typed values, and over the hash column itself, would
-    # misclassify every row as UPDATE). Default hash scope excludes the
-    # audit envelope for the same reason.
     _recover_interrupted_rebucket(target_path)
     _warn_audit_collisions(src)
-    src = _parallelize_scan(src)
+    src = parallelize_scan(src)
     if os.path.exists(target_path):
         num_buckets = _resolve_num_buckets(target_path, num_buckets)
-    if "row_hash" in src.columns:
-        hashed = src
-    else:
-        hashed = cdc.with_row_hash(
-            src, hash_cols or [c for c in src.columns if c not in AUDIT_COLS]
-        )
+    hashed = _hashed(src, hash_cols)
 
     def keyed_of(h: DataFrame) -> DataFrame:
         k = cdc.with_cdc_key(h, key_cols)
@@ -1078,134 +1348,30 @@ def merge_upsert_partitioned(
     # schemas across bucket dirs.
     key_migration = cdc.KEY_COL not in tgt.columns
     hashed, tgt, drifted = _widen_for_drift(hashed, tgt)
-    keyed = keyed_of(hashed)
-    t = cdc.ensure_cdc_key(tgt, key_cols).select(
-        F.col(cdc.KEY_COL), F.col("row_hash").alias("_tgt_hash")
-    )
-    # Micro-bucket digest prune (see operators/cdc.py): summarize both
-    # sides per pmod(xxhash64(key), 16K), join only the rows of micro-
-    # buckets whose digests differ. A proven no-change merge returns
-    # here without any classify join at all; a sparse merge joins
-    # O(changes × rows/16K) instead of shuffling both full sides.
-    s_narrow = keyed.select(*key_cols, cdc.KEY_COL, BUCKET_COL, "row_hash")
-    dirty_mb, clean_skip = (None, 0)
-    tgt_dig = None
-    side_loaded = False
-    if digest_prune and not (drifted or key_migration):
-        # Under drift / key backfill every bucket rewrites regardless and
-        # stored hashes cover a different column set — the digest pass
-        # would be spent to learn nothing. Callers that merge KNOWN
-        # subsets (streaming micro-batches) opt out: their digests are
-        # dirty nearly everywhere, so the pass buys nothing.
-        # The narrow frame is PERSISTED across the digest and the classify
-        # so the source-side hash/normalize expressions run exactly once
-        # whether the prune accepts, narrows, or declines (unpersisted as
-        # soon as the classify cache is materialized) — but only for
-        # small states, where the dense case it protects is plausible
-        # and the store is cheap (see DIGEST_PERSIST_MAX_BYTES).
-        if _should_persist_narrow(target_path):
-            s_narrow = s_narrow.persist()
-        # tgt_digest: caller-validated under the target's writer lock
-        # (replica sync) — same dict the caller pruned from, and one
-        # fewer fingerprint walk. See merge_upsert_mor's docstring.
-        side_dig = (
-            tgt_digest
-            if tgt_digest is not None
-            else digest_store.load(target_path)
-        )
-        side_loaded = side_dig is not None
-        dcmp = cdc.digest_compare(
-            s_narrow.select(cdc.KEY_COL, "row_hash"),
-            None if side_loaded else t,
-            tgt_digest=side_dig,
-            collect_src=side_loaded and _is_tiny_source(src),
-            src_digest=src_digest if side_loaded else None,
-        )
-        dirty_mb, clean_skip = dcmp.dirty, dcmp.clean_src
-        # Kill switch removes the maintenance cost too, not just the save.
-        tgt_dig = dcmp.tgt_digest if digest_store.enabled() else None
-    elif digest_store.enabled() and not (drifted or key_migration):
-        # Maintenance decoupled from pruning (see merge_upsert_parquet):
-        # a micro-batch merge keeps a valid sidecar valid by folding its
-        # classified changes; stale/absent sidecars are never seeded here.
-        tgt_dig = digest_store.load(target_path)
-        side_loaded = tgt_dig is not None
-    if dirty_mb is not None and not dirty_mb:
-        s_narrow.unpersist()
-        if not side_loaded:
-            digest_store.save(target_path, tgt_dig)
-        return {
-            "insert": 0, "update": 0, "skip": clean_skip,
-            "buckets_rewritten": 0,
-        }
-    s_cls = s_narrow
-    if dirty_mb is not None:
-        s_cls = s_narrow.withColumn(
-            "_mb", cdc.micro_bucket()
-        ).filter(in_list("_mb", dirty_mb)).drop("_mb")
-        t_src = tgt
-        if cdc.DIGEST_MICRO_BUCKETS % num_buckets == 0:
-            # Directory-level prune first: a dirty micro-bucket lives in
-            # exactly one _kb= dir (same hash, nested moduli).
-            dirty_kb = sorted({mb % num_buckets for mb in dirty_mb})
-            t_src = tgt.filter(in_list(BUCKET_COL, dirty_kb))
-        t = cdc.ensure_cdc_key(t_src, key_cols).select(
-            F.col(cdc.KEY_COL), F.col("row_hash").alias("_tgt_hash")
-        ).withColumn("_mb", cdc.micro_bucket()).filter(
-            in_list("_mb", dirty_mb)
-        ).drop("_mb")
-    else:
-        clean_skip = 0
-    # ONE narrow classify pass: cache only (raw keys, key, bucket, op,
-    # hash) — the wide rewrite inputs are rebuilt below from the small
-    # dirty sets, re-scanning parquet instead of caching table-sized
-    # source rows.
-    joined = s_cls.join(t, cdc.KEY_COL, "left_outer")
-    op = (
-        F.when(F.col("_tgt_hash").isNull(), F.lit(cdc.INSERT))
-        .when(F.col("row_hash") != F.col("_tgt_hash"), F.lit(cdc.UPDATE))
-        .otherwise(F.lit(cdc.SKIP))
-    )
-    dg_cols = cdc.digest_delta_cols() if tgt_dig is not None else []
-    ops = (
-        joined.withColumn(cdc.OP_COL, op)
-        .select(*key_cols, cdc.KEY_COL, BUCKET_COL, cdc.OP_COL, "row_hash", *dg_cols)
-        .cache()
-    )
-    # ONE bounded collect (≤ 3·num_buckets rows) yields the op counts AND
-    # the dirty-bucket list, and materializes the classify cache every
-    # later step reuses — previously two jobs each re-entered the cache.
-    try:
-        op_buckets = (
-            ops.groupBy(cdc.OP_COL, BUCKET_COL)
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .collect()
-        )
-    finally:
-        s_narrow.unpersist()
-    counts: dict[str, int] = {}
-    for r in op_buckets:
-        counts[r[cdc.OP_COL]] = counts.get(r[cdc.OP_COL], 0) + r["cnt"]
-    n_insert, n_update = counts.get(cdc.INSERT, 0), counts.get(cdc.UPDATE, 0)
-    # Rows in digest-clean micro-buckets never reached the join but are
-    # proven SKIPs — keep the reported counts src-complete.
-    n_skip = counts.get(cdc.SKIP, 0) + clean_skip
-    if n_insert == 0 and n_update == 0:
-        ops.unpersist()
-        if tgt_dig is not None and not side_loaded:
-            digest_store.save(target_path, tgt_dig)
-        return {"insert": 0, "update": 0, "skip": n_skip, "buckets_rewritten": 0}
-    new_dig = None
-    if tgt_dig is not None:
-        delta = cdc.collect_digest_delta(
-            ops.filter(F.col(cdc.OP_COL) != cdc.SKIP)
-        )
-        if delta is not None:
-            new_dig = digest_store.apply_delta(tgt_dig, delta)
 
-    dirty = sorted(
-        {r[BUCKET_COL] for r in op_buckets if r[cdc.OP_COL] != cdc.SKIP}
+    def tgt_kh(dirty_kb: list[int] | None) -> DataFrame:
+        t = tgt if dirty_kb is None else tgt.filter(in_list(BUCKET_COL, dirty_kb))
+        return cdc.ensure_cdc_key(t, key_cols).select(
+            F.col(cdc.KEY_COL), F.col("row_hash").alias("_tgt_hash")
+        )
+
+    c = _classify(
+        target_path, keyed_of(hashed), key_cols, tgt_kh,
+        num_buckets=num_buckets,
+        digest_prune=digest_prune,
+        digest_ok=not (drifted or key_migration),
+        src_digest=src_digest,
+        tgt_digest=tgt_digest,
     )
+    if c.n_insert == 0 and c.n_update == 0:
+        c.release()
+        c.seed_digest()
+        return {
+            "insert": 0, "update": 0, "skip": c.n_skip, "buckets_rewritten": 0,
+        }
+    new_dig = c.fold()
+
+    dirty = c.buckets(cdc.INSERT, cdc.UPDATE)
     if drifted or key_migration:
         # Schema drift (and the one-time _cdc_key backfill) must reach
         # EVERY bucket — pruning would leave clean buckets with the old
@@ -1215,52 +1381,17 @@ def merge_upsert_partitioned(
             | {r[BUCKET_COL] for r in tgt.select(BUCKET_COL).distinct().collect()}
         )
     data_cols = [
-        c
-        for c in tgt.columns
-        if c not in AUDIT_COLS and c not in (BUCKET_COL, cdc.KEY_COL)
+        col
+        for col in tgt.columns
+        if col not in AUDIT_COLS and col not in (BUCKET_COL, cdc.KEY_COL)
     ]
-
     # Partition-pruned target scan: only dirty buckets are read.
-    tgt_dirty = tgt.filter(in_list(BUCKET_COL, dirty))
-    tgt_dirty_k = cdc.ensure_cdc_key(tgt_dirty, key_cols)
-    n_dirty = n_insert + n_update
-    dirty_ops = ops.filter(F.col(cdc.OP_COL) != cdc.SKIP)
-    upd_keys = dirty_ops.filter(F.col(cdc.OP_COL) == cdc.UPDATE).select(cdc.KEY_COL)
-    src_dirty = _fetch_dirty_rows(
-        hashed,
-        dirty_ops,
-        key_cols,
-        n_dirty,
-        carry=[cdc.OP_COL, "row_hash", cdc.KEY_COL, BUCKET_COL],
-    ).cache()
-    untouched = tgt_dirty_k.join(
-        _maybe_broadcast(upd_keys, n_update), cdc.KEY_COL, "left_anti"
+    tgt_dirty_k = cdc.ensure_cdc_key(tgt.filter(in_list(BUCKET_COL, dirty)), key_cols)
+    new_parts, src_dirty = _rewrite_rows(
+        spark, target_path, tgt_dirty_k, hashed, c, key_cols,
+        [*data_cols, "row_hash", "id", "created_at", "updated_at",
+         cdc.KEY_COL, BUCKET_COL],
     )
-    tgt_upd = tgt_dirty_k.select(cdc.KEY_COL, "id", "created_at").join(
-        _maybe_broadcast(upd_keys, n_update), cdc.KEY_COL, "left_semi"
-    )
-    updated = (
-        src_dirty.filter(F.col(cdc.OP_COL) == cdc.UPDATE)
-        .join(_maybe_broadcast(tgt_upd, n_update), cdc.KEY_COL)
-        .withColumn("updated_at", F.current_timestamp())
-    )
-    audit = ["row_hash", "id", "created_at", "updated_at", cdc.KEY_COL, BUCKET_COL]
-    new_parts = untouched.select(*data_cols, *audit).unionByName(
-        updated.select(*data_cols, *audit)
-    )
-    if n_insert > 0:
-        # max(id) is a full-target scan — only pay it when inserting.
-        max_id = _max_id_stat(target_path)
-        if max_id is None:
-            max_id = tgt.agg(F.max("id")).collect()[0][0] or 0
-        inserted = with_audit_columns(
-            src_dirty.filter(F.col(cdc.OP_COL) == cdc.INSERT).select(
-                *data_cols, "row_hash", cdc.KEY_COL, BUCKET_COL
-            ),
-            key_cols,
-            id_offset=int(max_id),
-        )
-        new_parts = new_parts.unionByName(inserted.select(*data_cols, *audit))
 
     # CRASH SAFETY: stage the rebuilt dirty buckets to a sibling temp dir
     # FIRST (the job reads the live target while computing them — a dynamic
@@ -1286,18 +1417,18 @@ def merge_upsert_partitioned(
     finally:
         # Caches release on failure too — a failed merge must not leak
         # persisted frames for the session lifetime.
-        ops.unpersist()
+        c.release()
         src_dirty.unpersist()
         # After an INCOMPLETE inline rollback the live journal still
         # references staged (a bucket's only copy may be parked there) —
         # recovery owns the cleanup then.
         if not _staged_is_journaled(target_path, staged):
             shutil.rmtree(staged, ignore_errors=True)
-    digest_store.save(target_path, new_dig)
+    c.save(new_dig)
     return {
-        "insert": n_insert,
-        "update": n_update,
-        "skip": n_skip,
+        "insert": c.n_insert,
+        "update": c.n_update,
+        "skip": c.n_skip,
         "buckets_rewritten": len(dirty),
     }
 
@@ -1323,23 +1454,17 @@ def merge_upsert_parquet(
     never feed row identity).
     """
     _warn_audit_collisions(src)
-    src = _parallelize_scan(src)
+    src = parallelize_scan(src)
     # A crash mid-swap may have left the live dir renamed away — recover
     # BEFORE the existence check, or the merge below would re-run the
     # initial load over a table that still exists (fresh ids/created_at
     # for every row).
     _recover_interrupted_rebucket(target_path)
+    src_h = _hashed(src, hash_cols)
     if _state_absent(target_path):
-        hashed = (
-            src
-            if "row_hash" in src.columns
-            else cdc.with_row_hash(
-                src, hash_cols or [c for c in src.columns if c not in AUDIT_COLS]
-            )
-        )
         # Persist the normalized _cdc_key alongside row_hash so later
         # syncs read both from parquet instead of recomputing.
-        out = with_audit_columns(cdc.with_cdc_key(hashed, key_cols), key_cols)
+        out = with_audit_columns(cdc.with_cdc_key(src_h, key_cols), key_cols)
         overwrite_parquet(out, target_path)
         # Count the WRITTEN files (parquet footer metadata, no recompute) —
         # counting `out` would re-run the whole hash+normalize plan.
@@ -1353,207 +1478,63 @@ def merge_upsert_parquet(
             "sync it with merge_upsert_partitioned — the flat merge would "
             "silently flatten the pruned layout."
         )
-
-    # ONE narrow classify pass: only (keys, op, hash) is computed and
-    # cached — never the wide source rows. The wide frames for the rewrite
-    # are reconstructed by (usually broadcast) joins of the source /
-    # target against the small dirty-key sets, which re-scan parquet with
-    # pushdown instead of holding a table-sized cache — the only shape
-    # that survives a 100 TB source.
-    src_h = (
-        src
-        if "row_hash" in src.columns
-        else cdc.with_row_hash(
-            src, hash_cols or [c for c in src.columns if c not in AUDIT_COLS]
-        )
-    )
     # Pre-persisted-key targets lack _cdc_key; the first change-bearing
     # merge backfills it via the full-rewrite path.
     key_migration = cdc.KEY_COL not in tgt.columns
     src_h, tgt, drifted = _widen_for_drift(src_h, tgt)
-    narrow = cdc.with_cdc_key(src_h.select(*key_cols, "row_hash"), key_cols)
-    t_kh = cdc.ensure_cdc_key(tgt, key_cols).select(
-        F.col(cdc.KEY_COL), F.col("row_hash").alias("_tgt_hash")
+    tgt_k = cdc.ensure_cdc_key(tgt, key_cols)
+    t_kh = tgt_k.select(F.col(cdc.KEY_COL), F.col("row_hash").alias("_tgt_hash"))
+    c = _classify(
+        target_path, cdc.with_cdc_key(src_h, key_cols), key_cols, lambda _kb: t_kh,
+        digest_prune=digest_prune,
+        digest_ok=not (drifted or key_migration),
+        src_digest=src_digest,
+        tgt_digest=tgt_digest,
     )
-    # Micro-bucket digest prune (operators/cdc.py): a proven no-change
-    # merge returns before any classify join; a sparse one joins only
-    # the dirty micro-buckets' rows. Skipped under drift/key backfill
-    # (stored hashes cover a different column set — nothing to learn).
-    # The target side comes from the persisted sidecar when its
-    # fingerprint matches the table's listing (sinks/digest_store.py) —
-    # then the compare does ZERO target-side I/O; otherwise one narrow
-    # scan computes it, and the merge saves a fresh sidecar after
-    # publishing so the NEXT sync skips the scan.
-    dirty_mb, clean_skip = (None, 0)
-    tgt_dig = None
-    side_loaded = False
-    if digest_prune and not (drifted or key_migration):
-        # Persisted across digest + classify so the source hash/normalize
-        # runs once whatever the prune decides — small states only (see
-        # DIGEST_PERSIST_MAX_BYTES on the bucketed variant).
-        if _should_persist_narrow(target_path):
-            narrow = narrow.persist()
-        # tgt_digest: caller-validated under the target's writer lock
-        # (replica sync) — see merge_upsert_mor's docstring.
-        side_dig = (
-            tgt_digest
-            if tgt_digest is not None
-            else digest_store.load(target_path)
-        )
-        side_loaded = side_dig is not None
-        dcmp = cdc.digest_compare(
-            narrow.select(cdc.KEY_COL, "row_hash"),
-            None if side_loaded else t_kh,
-            tgt_digest=side_dig,
-            collect_src=side_loaded and _is_tiny_source(src),
-            src_digest=src_digest if side_loaded else None,
-        )
-        dirty_mb, clean_skip = dcmp.dirty, dcmp.clean_src
-        # The kill switch must remove the maintenance cost too (delta
-        # columns in the classify cache + the fold job), not just the
-        # final save.
-        tgt_dig = dcmp.tgt_digest if digest_store.enabled() else None
-    elif digest_store.enabled() and not (drifted or key_migration):
-        # MAINTENANCE WITHOUT PRUNING (decoupled): known-subset merges —
-        # streaming micro-batches — opt out of the digest COMPARE because
-        # their digests are dirty nearly everywhere, but a VALID sidecar
-        # must still be kept valid by folding the classified changes in,
-        # or one trickle batch knocks the next snapshot sync back onto
-        # the full-scan path. Load-only: a stale/absent sidecar stays
-        # that way (a known-subset batch never pays a state scan to
-        # seed one — the next snapshot sync's scan fallback does).
-        tgt_dig = digest_store.load(target_path)
-        side_loaded = tgt_dig is not None
-    if dirty_mb is not None and not dirty_mb:
-        narrow.unpersist()
-        if not side_loaded:
-            digest_store.save(target_path, tgt_dig)
-        return {"insert": 0, "update": 0, "skip": clean_skip}
-    n_cls = narrow
-    if dirty_mb is not None:
-        n_cls = narrow.withColumn("_mb", cdc.micro_bucket()).filter(
-            in_list("_mb", dirty_mb)
-        ).drop("_mb")
-        t_kh = t_kh.withColumn("_mb", cdc.micro_bucket()).filter(
-            in_list("_mb", dirty_mb)
-        ).drop("_mb")
-    else:
-        clean_skip = 0
-    joined = n_cls.join(t_kh, cdc.KEY_COL, "left_outer")
-    op = (
-        F.when(F.col("_tgt_hash").isNull(), F.lit(cdc.INSERT))
-        .when(F.col("row_hash") != F.col("_tgt_hash"), F.lit(cdc.UPDATE))
-        .otherwise(F.lit(cdc.SKIP))
-    )
-    # Sidecar maintenance needs each row's digest-delta fold, which
-    # reads the OLD target hash — project it into the classify cache
-    # while ``_tgt_hash`` is still bound (three 8-byte columns; clean
-    # micro-buckets never reached the join and contribute zero delta).
-    dg_cols = cdc.digest_delta_cols() if tgt_dig is not None else []
-    ops = (
-        joined.withColumn(cdc.OP_COL, op)
-        .select(*key_cols, cdc.KEY_COL, cdc.OP_COL, "row_hash", *dg_cols)
-        .cache()
-    )
-    try:
-        counts = {r["op"]: r["cnt"] for r in cdc.cdc_counts(ops).collect()}
-    finally:
-        narrow.unpersist()
-    n_insert = counts.get(cdc.INSERT, 0)
-    n_update = counts.get(cdc.UPDATE, 0)
-    n_skip = counts.get(cdc.SKIP, 0) + clean_skip
-    data_cols = [c for c in tgt.columns if c not in AUDIT_COLS and c != cdc.KEY_COL]
+    data_cols = [
+        col for col in tgt.columns if col not in AUDIT_COLS and col != cdc.KEY_COL
+    ]
+    out_cols = [*data_cols, "row_hash", cdc.KEY_COL, "id", "created_at", "updated_at"]
 
-    if n_insert == 0 and n_update == 0:
+    if c.n_insert == 0 and c.n_update == 0:
         # No-change pass (the idempotency invariant): nothing to write.
         # (Digest-dirty buckets with zero changes = source-missing keys;
         # the flat merge never deletes, so the state — and its digest —
         # is untouched.)
-        ops.unpersist()
-        if tgt_dig is not None and not side_loaded:
-            digest_store.save(target_path, tgt_dig)
-        return {"insert": 0, "update": 0, "skip": n_skip}
+        c.release()
+        c.seed_digest()
+        return {"insert": 0, "update": 0, "skip": c.n_skip}
 
     # The merge WILL publish: fold the classified changes into the
     # digest now (one bounded job off the hot cache), save after the
     # table write lands so the fingerprint binds digest to files.
-    new_dig = None
-    if tgt_dig is not None:
-        delta = cdc.collect_digest_delta(
-            ops.filter(F.col(cdc.OP_COL) != cdc.SKIP)
-        )
-        if delta is not None:
-            new_dig = digest_store.apply_delta(tgt_dig, delta)
+    new_dig = c.fold()
 
-    if n_update == 0 and not drifted and not key_migration:
+    if c.n_update == 0 and not drifted and not key_migration:
         # Insert-only pass — the common incremental shape. Pure append:
         # no rewrite of existing state at all (the reference's batched
         # INSERT path, minus its row-at-a-time fallback). Skipped under
         # drift: appended files would carry the widened schema while old
         # files keep the narrow one.
-        ins_ops = ops.filter(F.col(cdc.OP_COL) == cdc.INSERT)
-        max_id = _max_id_stat(target_path)
-        if max_id is None:
-            max_id = tgt.agg(F.max("id")).collect()[0][0] or 0
         inserted = with_audit_columns(
             _fetch_dirty_rows(
-                src_h, ins_ops, key_cols, n_insert,
-                carry=[cdc.OP_COL, "row_hash", cdc.KEY_COL],
+                src_h, c.ops.filter(F.col(cdc.OP_COL) == cdc.INSERT), key_cols,
+                c.n_insert, carry=[cdc.OP_COL, "row_hash", cdc.KEY_COL],
             ).select(*data_cols, "row_hash", cdc.KEY_COL),
             key_cols,
-            id_offset=int(max_id),
+            id_offset=_next_id_offset(spark, [target_path]),
         )
         try:
-            inserted.select(
-                *data_cols, "row_hash", cdc.KEY_COL, "id", "created_at", "updated_at"
-            ).write.mode("append").parquet(target_path)
+            inserted.select(*out_cols).write.mode("append").parquet(target_path)
         finally:
-            ops.unpersist()
-        digest_store.save(target_path, new_dig)
-        return {"insert": n_insert, "update": 0, "skip": n_skip}
+            c.release()
+        c.save(new_dig)
+        return {"insert": c.n_insert, "update": 0, "skip": c.n_skip}
 
     # Updates present → staged rewrite: unchanged ∪ updated ∪ inserted.
-    tgt_k = cdc.ensure_cdc_key(tgt, key_cols)
-    n_dirty = n_insert + n_update
-    dirty_ops = ops.filter(F.col(cdc.OP_COL) != cdc.SKIP)
-    upd_keys = dirty_ops.filter(F.col(cdc.OP_COL) == cdc.UPDATE).select(cdc.KEY_COL)
-    src_dirty = _fetch_dirty_rows(
-        src_h, dirty_ops, key_cols, n_dirty,
-        carry=[cdc.OP_COL, "row_hash", cdc.KEY_COL],
-    ).cache()
-
-    untouched = tgt_k.join(
-        _maybe_broadcast(upd_keys, n_update), cdc.KEY_COL, "left_anti"
+    new_state, src_dirty = _rewrite_rows(
+        spark, target_path, tgt_k, src_h, c, key_cols, out_cols
     )
-
-    # The updated rows' audit identity (id, created_at) comes from the
-    # target — pre-filter that side to just the updated keys so the final
-    # join has a tiny build side.
-    tgt_upd = tgt_k.select(cdc.KEY_COL, "id", "created_at").join(
-        _maybe_broadcast(upd_keys, n_update), cdc.KEY_COL, "left_semi"
-    )
-    updated = (
-        src_dirty.filter(F.col(cdc.OP_COL) == cdc.UPDATE)
-        .join(_maybe_broadcast(tgt_upd, n_update), cdc.KEY_COL)
-        .withColumn("updated_at", F.current_timestamp())
-    )
-
-    out_cols = [*data_cols, "row_hash", cdc.KEY_COL, "id", "created_at", "updated_at"]
-    new_state = untouched.select(*out_cols).unionByName(updated.select(*out_cols))
-
-    if n_insert > 0:
-        max_id = _max_id_stat(target_path)
-        if max_id is None:
-            max_id = tgt.agg(F.max("id")).collect()[0][0] or 0
-        inserted = with_audit_columns(
-            src_dirty.filter(F.col(cdc.OP_COL) == cdc.INSERT).select(
-                *data_cols, "row_hash", cdc.KEY_COL
-            ),
-            key_cols,
-            id_offset=int(max_id),
-        )
-        new_state = new_state.unionByName(inserted.select(*out_cols))
-
     # Stage to a temp dir, then atomically swap — parquet overwrite of a
     # path we are also reading would corrupt the source mid-plan.
     # Journaled whole-dir swap (the old `rmtree(live); replace(tmp, live)`
@@ -1572,15 +1553,15 @@ def merge_upsert_parquet(
         # persisted frames for the session lifetime. A staging-write
         # failure leaves no journal, so the staged dir is safe to drop;
         # after the journal exists the swap is recovered forward instead.
-        ops.unpersist()
+        c.release()
         src_dirty.unpersist()
         if not os.path.exists(
             target_path.rstrip("/") + REBUCKET_JOURNAL_SUFFIX
         ):
             shutil.rmtree(staged, ignore_errors=True)
-    digest_store.save(target_path, new_dig)
+    c.save(new_dig)
     return {
-        "insert": n_insert,
-        "update": n_update,
-        "skip": n_skip,
+        "insert": c.n_insert,
+        "update": c.n_update,
+        "skip": c.n_skip,
     }

@@ -52,7 +52,8 @@ class TestDigestComparator:
         kh = cdc.with_cdc_key(a, ["K"])
         s = with_row_hash(kh, ["K", "V"]).select(cdc.KEY_COL, "row_hash")
         t = s.withColumnRenamed("row_hash", "_tgt_hash")
-        dirty, clean = cdc.digest_dirty_micro_buckets(s, t)
+        c = cdc.digest_compare(s, t)
+        dirty, clean = c.dirty, c.clean_src
         assert dirty == []
         assert clean == 300
 
@@ -69,7 +70,8 @@ class TestDigestComparator:
         t = with_row_hash(cdc.with_cdc_key(a, ["K"]), ["K", "V"]).select(
             cdc.KEY_COL, F.col("row_hash").alias("_tgt_hash")
         )
-        dirty, clean = cdc.digest_dirty_micro_buckets(s, t)
+        c = cdc.digest_compare(s, t)
+        dirty, clean = c.dirty, c.clean_src
         assert len(dirty) == 1
         assert clean == 299
 
@@ -84,7 +86,8 @@ class TestDigestComparator:
         t = with_row_hash(cdc.with_cdc_key(tgt, ["K"]), ["K", "V"]).select(
             cdc.KEY_COL, F.col("row_hash").alias("_tgt_hash")
         )
-        dirty, clean = cdc.digest_dirty_micro_buckets(s, t)
+        c = cdc.digest_compare(s, t)
+        dirty, clean = c.dirty, c.clean_src
         assert dirty  # inserted keys 100,101 and removed key 5 each dirty one
         assert 1 <= len(dirty) <= 3
 
@@ -100,7 +103,8 @@ class TestDigestComparator:
             cdc.KEY_COL, F.col("row_hash").alias("_tgt_hash")
         )
         # 400 distinct keys over a tiny modulus → ≥ half dirty → declined.
-        dirty, clean = cdc.digest_dirty_micro_buckets(s, t, micro=64)
+        c = cdc.digest_compare(s, t, micro=64)
+        dirty, clean = c.dirty, c.clean_src
         assert dirty is None and clean == 0
 
     def test_dense_change_on_small_table_declines_at_default_modulus(
@@ -120,7 +124,8 @@ class TestDigestComparator:
         t = with_row_hash(cdc.with_cdc_key(tgt, ["K"]), ["K", "V"]).select(
             cdc.KEY_COL, F.col("row_hash").alias("_tgt_hash")
         )
-        dirty, clean = cdc.digest_dirty_micro_buckets(s, t)  # default 16K
+        c = cdc.digest_compare(s, t)  # default 16K
+        dirty, clean = c.dirty, c.clean_src
         assert dirty is None and clean == 0
 
     def test_env_kill_switch(self, spark, monkeypatch):
@@ -132,7 +137,8 @@ class TestDigestComparator:
             cdc.KEY_COL, "row_hash"
         )
         t = s.withColumnRenamed("row_hash", "_tgt_hash")
-        assert cdc.digest_dirty_micro_buckets(s, t) == (None, 0)
+        c = cdc.digest_compare(s, t)
+        assert (c.dirty, c.clean_src) == (None, 0)
 
 
 class TestPersistGate:
@@ -259,6 +265,74 @@ class TestMergeDifferential:
             assert p2[k] == u2[k], (k, p2, u2)
         assert ps == us
         assert p2["delete"] == 0 and p2["update"] == 0  # replay converged
+
+    @pytest.mark.parametrize("stale", [False, True], ids=["valid", "stale"])
+    def test_three_writers_classify_identically(self, spark, tmp_path, stale):
+        """The flat, bucketed and MOR writers share one classify: on the
+        same seeded snapshot sequence they must report identical op
+        counts and land identical live states — with a valid sidecar,
+        and with the sidecar knocked stale before every merge — and the
+        maintained sidecar must equal the digest of the live state."""
+        from presencia_etl_spark.sinks import digest_store
+
+        rng = random.Random(8)
+        n = rng.randint(300, 500)
+        base = _docs(spark, n)
+        mutated = _docs(
+            spark,
+            n + rng.randint(5, 15),
+            extra_mod=rng.choice([23, 37]),
+            drop_mod=rng.choice([61, 97]),
+        )
+        writers = {
+            "flat": (
+                lambda df, t: merge_upsert_parquet(spark, df, t, ["K"]),
+                spark.read.parquet,
+            ),
+            "bucketed": (
+                lambda df, t: merge_upsert_partitioned(
+                    spark, df, t, ["K"], num_buckets=16
+                ),
+                spark.read.parquet,
+            ),
+            "mor": (
+                lambda df, t: mor.merge_upsert_mor(
+                    spark, df, t, ["K"], num_buckets=16, compact_every=None
+                ),
+                lambda t: mor.read_mor(spark, t),
+            ),
+        }
+        paths = {w: str(tmp_path / w) for w in writers}
+        for w, (merge, _live) in writers.items():
+            merge(base, paths[w])  # initial load: no sidecar yet
+        # base again (scan compare, seeds the sidecar), then the mutated
+        # snapshot (updates, inserts, source-missing keys) and its replay
+        all_counts = []
+        for step, snap in enumerate((base, mutated, mutated)):
+            counts, states = {}, {}
+            for w, (merge, live) in writers.items():
+                t = paths[w]
+                if step > 0:
+                    if stale:
+                        with open(os.path.join(t, ".knock"), "a") as fh:
+                            fh.write("x")
+                        assert digest_store.load(t) is None
+                    else:
+                        assert digest_store.load(t) is not None
+                r = merge(snap, t)
+                counts[w] = (r["insert"], r["update"], r["skip"])
+                df = live(t)
+                states[w] = sorted(
+                    map(tuple, df.select("K", "V", "row_hash").collect())
+                )
+                assert digest_store.load(t) == cdc.state_digest(df), (w, step)
+            assert len(set(counts.values())) == 1, (step, counts)
+            assert states["flat"] == states["bucketed"] == states["mor"], step
+            all_counts.append(counts["flat"])
+        seed_pass, change, replay = all_counts
+        assert seed_pass == (0, 0, n)
+        assert change[0] > 0 and change[1] > 0
+        assert replay[:2] == (0, 0)
 
     def test_mor_nochange_writes_nothing_without_classify(
         self, spark, tmp_path
